@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the physical plan of selected driver queries and
   * flags scale red-flags (missing filter pushdown, unpruned scans, extra
   * shuffles, nested-loop joins). `runMain graft.PlanCheck [names...]`. */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+    val spark = GraftSession.builder("graft-plancheck", 8).master("local[8]")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false") // reference semantics: nil/infinity, not runtime aborts (GraftSession)
-      .config("spark.sql.legacy.sizeOfNull", "false") // size(null) stays null, not legacy -1
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"

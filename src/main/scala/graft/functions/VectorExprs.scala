@@ -299,12 +299,13 @@ case class VectorCosine(left: Expression, right: Expression)
   * difference; the bit-identity claim above is per-field, conditional
   * on a non-null input.
   *
-  * Why native (r16, found by IvfRouteWidthStudy): in the HOF form the
-  * `scale` operand of the per-element divide is the whole O(d) absMax
-  * aggregate, and the interpreted lambda path re-evaluates it for EVERY
-  * element — O(d²) per row. Quantizing 50k d = 4096 vectors ran ~20
-  * minutes there; this loop is O(d) and takes seconds. At ingest scale
-  * (SQ8-index a 100 TB embedding corpus) the difference is the job. */
+  * Why native (r16, scaling/ivf_route_width.json, study main at commit
+  * aaf40bf): in the HOF form the `scale` operand of the per-element
+  * divide is the whole O(d) absMax aggregate, and the interpreted
+  * lambda path re-evaluates it for EVERY element — O(d²) per row.
+  * Quantizing 50k d = 4096 vectors ran ~20 minutes there; this loop is
+  * O(d) and takes seconds. At ingest scale (SQ8-index a 100 TB embedding
+  * corpus) the difference is the job. */
 case class QuantizeInt8(child: Expression)
     extends UnaryExpression with CodegenFallback {
   import org.apache.spark.sql.types.{ByteType, StructField, StructType}

@@ -685,13 +685,6 @@ object Streams {
     // state commits on /tmp, ~0 on /dev/shm). A production sink would point
     // this at durable storage; the memory sink is already non-durable.
     val ckpt = checkpointDir(name)
-    // Opt-in RocksDB state store: the production choice once state exceeds
-    // executor heap (HDFS-backed state is an in-memory map). Measured at
-    // harness SF it is 4-5x SLOWER (per-row native put overhead, 40k-row
-    // state), so heap-backed stays the default here.
-    if (sys.env.contains("SPARK_GRAFT_ROCKSDB"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val q = stream.writeStream.outputMode(mode)
       .option("checkpointLocation", ckpt.toString)
       .format("memory").queryName(name).start()

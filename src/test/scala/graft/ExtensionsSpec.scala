@@ -5,14 +5,12 @@ import org.apache.spark.sql.{functions => F}
 import graft.functions.TextExprs
 
 /** SQL registration of the native expressions ([[GraftExtensions]]):
-  * the SQL path must be the SAME expression the Column API builds. */
+  * the SQL path must be the SAME expression the Column API builds. The
+  * spec session gets the functions from `spark.sql.extensions` (a
+  * [[GraftSession]] conf), so the SQL assertions exercise the injection;
+  * the live-session [[GraftExtensions.register]] path has its own test. */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GraftExtensions.register(spark)
-  }
 
   test("extensions class wires every function without error") {
     // the injection list must be structurally sound (names, infos,
@@ -174,5 +172,23 @@ class ExtensionsSpec extends SparkSpec {
   test("recommended confs carry the extensions registration") {
     assert(GraftSession.recommendedConfs(8)("spark.sql.extensions") ==
       "graft.GraftExtensions")
+  }
+
+  test("register restores the functions on a live session that lacks them") {
+    // a child session with the graft functions dropped stands in for a
+    // session built without the extensions conf
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (ident, _, _) =>
+      registry.dropFunction(ident)
+    }
+    intercept[Exception](s.sql("SELECT simhash64('a b')").collect())
+    GraftExtensions.register(s)
+    GraftExtensions.functions.foreach { case (ident, _, _) =>
+      assert(registry.functionExists(ident), ident)
+    }
+    assert(s.sql("SELECT simhash64('the quick brown fox')").collect()
+      .head.getLong(0) == spark.sql(
+        "SELECT simhash64('the quick brown fox')").collect().head.getLong(0))
   }
 }

@@ -286,6 +286,33 @@ class GdfSpec extends SparkSpec {
     // would interleave a zipped self-union (breaking concat_rows frame
     // order) and collapse readShards' per-shard union to one partition
     assert(c("spark.sql.unionOutputPartitioning") == "false")
+    // the specs run the session the library ships: every recommended
+    // conf is in effect on the shared spec session
+    val live = GraftSession.recommendedConfs(4).map { case (k, _) =>
+      k -> spark.conf.getOption(k)
+        .orElse(spark.sparkContext.getConf.getOption(k)).orNull
+    }
+    assert(live == GraftSession.recommendedConfs(4))
+  }
+
+  test("GraftSession is the only SparkSession builder in the library") {
+    // one way to build a session: mains and harnesses start from
+    // GraftSession.builder/local instead of hand-copying its confs. A
+    // regex, so a line break before `.builder` or a call without
+    // parentheses cannot hide one
+    val builderCall = """SparkSession\s*\.\s*builder\b""".r
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val builders = scalaFiles(root).filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try builderCall.findFirstIn(src.mkString).nonEmpty finally src.close()
+    }.map(_.getName)
+    assert(builders == Seq("GraftSession.scala"), builders)
   }
 
   test("concat_rows of SinglePartition frames keeps frame order and " +
